@@ -2001,7 +2001,7 @@ object SparkEntry {
 
   /** Reuse a path-based stored artifact ACROSS SESSIONS when its source
     * table is unchanged, else (re)build. Valid = `_SUCCESS` present (a
-    * partial write never serves — the PlanDiag r19-advice lesson: a bare
+    * partial write never serves — the r19-advice lesson: a bare
     * exists() check reads interrupted writes) AND the `_GRAFT_SRC_FPR`
     * marker matches the current [[sourceFingerprint]] (a driver-regenerated
     * testdata vintage never serves a stale rewrite). This is the production
@@ -2090,7 +2090,7 @@ object SparkEntry {
     * like [[zorderedLineitem]]; `Layout.writeSorted` carries the RELY
     * facts onto the copy.
     */
-  private[graft] def custkeySortedOrders(s: SparkSession, dir: String): String = {
+  private def custkeySortedOrders(s: SparkSession, dir: String): String = {
     pruneStoredIndexes()
     storedIndexes.getOrElseUpdate((s, dir, "osorted"), {
       val p = new java.io.File(s"spark-warehouse/graft_osorted_${tableTag(dir)}").getAbsolutePath

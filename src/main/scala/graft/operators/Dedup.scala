@@ -461,7 +461,8 @@ object Dedup {
     // broadcast is bounded by that candidate count: a pathological batch
     // (one boilerplate doc band-colliding with millions of corpus docs)
     // should pre-dedup within itself or take [[minhashIncremental]]'s
-    // shuffle-join path instead.
+    // `Some(corpusIndex)` branch, whose verify leg shuffle-joins the full
+    // index (its no-index path broadcasts `candIds` too).
     val shCorp = bandIndex
       .join(broadcast(vsCorpus.select(col("id_b").as("id")).distinct()), Seq("id"), "left_semi")
       .select(col("id"), col("sh")).dropDuplicates("id")

@@ -89,7 +89,12 @@ object Layout {
       val parts: Seq[org.apache.hadoop.fs.Path] =
         if (fs.getFileStatus(root).isDirectory)
           fs.listStatus(root).toSeq
-            .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+            .filter { s =>
+              // Spark's InMemoryFileIndex skips `_`/`.`-prefixed files: a
+              // staged `_x.parquet` is not part of the table the scan reads
+              val n = s.getPath.getName
+              s.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+            }
             .map(_.getPath)
         else Seq(root)
       usable = parts.nonEmpty

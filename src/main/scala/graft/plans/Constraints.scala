@@ -90,9 +90,6 @@ object Constraints {
 
   def get(tag: String): Option[TableConstraints] = registry.get(tag)
 
-  def forPlan(plan: LogicalPlan): Option[TableConstraints] =
-    scanTag(plan).flatMap(registry.get)
-
   /** Declare distinct-value upper bounds for columns of a single-scan
     * frame. Returns false (no registration) when the frame has no scan
     * identity to hang the facts on. */

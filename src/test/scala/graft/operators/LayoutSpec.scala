@@ -134,6 +134,23 @@ class LayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(viaScheme == got, s"scheme-qualified listing $viaScheme != local $got")
   }
 
+  test("footerLongMax skips `_`/`.`-prefixed part files, as the scan's file index does") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_footer_hidden").toString
+    (0L until 100L).toDF("a").write.mode("overwrite").parquet(s"$dir/t")
+    // a stale staged file with a much larger max, planted under both
+    // hidden prefixes: Spark's InMemoryFileIndex never reads it
+    (0L until 10L).map(_ + 1000000L).toDF("a").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/big")
+    val bigPart = new java.io.File(s"$dir/big").listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head.toPath
+    Seq("_staged.parquet", ".hidden.parquet").foreach { n =>
+      java.nio.file.Files.copy(bigPart, java.nio.file.Paths.get(s"$dir/t", n))
+    }
+    val scanMax = spark.read.parquet(s"$dir/t").agg(max(col("a"))).head().getLong(0)
+    assert(scanMax == 99L)
+    assert(Layout.footerLongMax(spark, s"$dir/t", Seq("a")).contains(Map("a" -> scanMax)))
+  }
+
   test("footerLongMax refuses int-BACKED logical types whose stats are raw physical values (r21)") {
     // decimal(10,2) is int64-backed in parquet: its footer max is the
     // UNSCALED long (12345 for 123.45) wrapped in a java.lang.Long — a
